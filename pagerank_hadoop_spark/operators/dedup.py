@@ -16,6 +16,8 @@ built-ins (xxhash64, transform, aggregate), all whole-stage-codegen.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -115,6 +117,19 @@ def md5_shingle_hashes(text: Column, n: int = 5, distinct: bool = True) -> Colum
 _MINHASH_P = 4294967311  # smallest prime > 2^32
 
 
+_BYTE_UNITS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _conf_bytes(value: str) -> int:
+    """Byte count of a Spark size conf: ``134217728``, ``128m``,
+    ``64MB``, ``1g`` (Spark's ``byteStringAsBytes`` grammar; a bare
+    number is bytes)."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", value.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_UNITS[m.group(2)]
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Ensure per-document CPU-heavy stages use all cores.
 
@@ -132,7 +147,7 @@ def _spread(df: DataFrame) -> DataFrame:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        max_split = int(
+        max_split = _conf_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
         )
         small = size < target * max_split

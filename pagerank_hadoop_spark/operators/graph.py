@@ -21,7 +21,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 
 from pagerank_hadoop_spark import runtime_counters
-from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
 
 
 class PregelNotConverged(RuntimeError):
@@ -41,16 +40,20 @@ def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
         warnings.warn(msg, RuntimeWarning, stacklevel=3)
 
 
-def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
+def _edge_partitions(
+    edges: DataFrame, doubled: bool = True, task_bytes: int = 1 << 20
+) -> int:
     """Right-size the per-round task count for an iterative loop from
     Catalyst's plan-size estimate — no job, unlike the ``count()``
     this replaces (a full edge scan just to pick a partition count;
-    measured ~20% of bfs_hops' wall at sf0.1). Id-pair rows are a few
-    tens of bytes, so ~1 MB per task tracks pagerank's
-    ROWS_PER_ITER_TASK economy (Catalyst's post-projection/distinct
-    size estimates run low, so the divisor is deliberately tight);
-    the estimate only needs the right order of magnitude (small
-    graph → few tasks, big graph → all)."""
+    measured ~20% of bfs_hops' wall at sf0.1). ``task_bytes`` is the
+    estimate per task. Id-pair rows are a few tens of bytes, so the
+    default 1 MB is on the order of 10^4-10^5 rows per task
+    (Catalyst's post-projection/distinct size estimates run low, so
+    the divisor is deliberately tight); the PageRank loops, whose
+    state rows carry whole outlink arrays, pass a larger one. The
+    estimate only needs the right order of magnitude (small graph →
+    few tasks, big graph → all)."""
     spark = edges.sparkSession
     try:
         shuffle_parts = int(
@@ -66,7 +69,7 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
         return shuffle_parts
     if doubled:
         size *= 2  # symmetrized edge list
-    need = max(1, size // (1 << 20))
+    need = max(1, size // task_bytes)
     return max(1, min(shuffle_parts, need)) if need < shuffle_parts else shuffle_parts
 
 
@@ -82,11 +85,18 @@ def _loop_shuffle_scope(spark, parts: int | None):
     on scc/bfs wall at sf0.1). At production scale the stats-derived
     count reaches the session default and this is a no-op; it only
     ever narrows, never widens. Restores the session value even on
-    error. Only loop drivers whose aggregates are order-insensitive
-    and exact (min / mode / count / bool-or on ids) may use it —
-    float-sum loops (pagerank, hits) stay at the session setting so
-    partial-aggregation order, and therefore last-ulp sums, cannot
-    move under the oracle gate.
+    error. Loops whose aggregates are order-insensitive and exact
+    (min / mode / count / bool-or on ids) cannot move results here.
+    Float-sum loops can, in the last ulp, because narrowing regroups
+    partial sums; the PageRank loops (uniform, personalized, weighted)
+    run in this scope on measured evidence: at sf0.01 the 9-dp oracle
+    hashes of pagerank_topk, pagerank_iter1, pagerank_corrected,
+    pagerank_resume, wiki_pagerank, ppr_from_part and
+    weighted_pagerank_topk are identical in and out of it; both
+    benchmark workloads (perfbench) agree with their numpy replay to
+    1e-9 relative; and tier-1 pins ranks to 1e-12 across shuffle
+    partitions {1, 4, 32} x AQE on/off. HITS has no such evidence and
+    stays at the session setting.
 
     NOT thread-safe: this mutates the session-global conf, so any
     concurrent query on the same SparkSession silently plans its
@@ -119,9 +129,8 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # stats-derived condition that says "this graph is small" says
     # "these rules cannot pay here". At production scale parts >=
     # current, the scope is a no-op, and AQE skew-splitting + runtime
-    # filters stay on. Both knobs are physical-only; the loops
-    # admitted to this scope aggregate order-insensitively (min /
-    # count / mode / bool-or), so results cannot move.
+    # filters stay on. Both knobs are physical-only: the same rows
+    # flow either way (see above for the float-sum loops).
     # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
     # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
     # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.
@@ -137,9 +146,7 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # measured per-round floor of the r15 dissection), while a
     # shuffle join over 1-3-partition loop state is a tiny exchange
     # that executes lazily inside the round's one counting job. Join
-    # STRATEGY cannot move results (same rows either way; these loops
-    # aggregate order-insensitively — min/count/mode/bool-or — which
-    # is the same condition that admits them to this scope). At
+    # STRATEGY cannot move results (same rows either way). At
     # production width the scope is a no-op and broadcast planning
     # stays on. SPARK_GRAFT_LOOP_NOBCAST=0 is the A/B toggle.
     nobcast = lean and _os.environ.get("SPARK_GRAFT_LOOP_NOBCAST", "1") != "0"
@@ -282,6 +289,8 @@ class PropertyGraph:
     ) -> DataFrame:
         """Iterative PageRank (see operators.pagerank for semantics
         and the 100 TB loop design)."""
+        from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+
         ranks, _ = pagerank_with_n(
             self.edges,
             vertices=self.vertices,
@@ -358,10 +367,9 @@ def connected_components(
     shuffle_parts = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    # Right-size the per-round task count to the edge count (see
-    # pagerank._iter_partitions): a small graph over 32 partitions
-    # makes every round 32 near-empty tasks. The count is a
-    # column-pruned scan of the (not yet doubled) edge frame.
+    # Right-size the per-round task count to the edge list's
+    # plan-size estimate: a small graph over 32 partitions makes every
+    # round 32 near-empty tasks.
     parts = _edge_partitions(edges)
     # pointer jumping pays one extra (id, label) join per round to cut
     # rounds from O(diameter) to O(log diameter). On a small graph the
@@ -1002,11 +1010,13 @@ def bipartite_project(
             .where(F.col("__deg") <= max_degree)
             .select("dst")
         )
-        # no second _wide: a semi-join preserves its probe side's
-        # partitioning, and e is already spread — the repartition here
-        # was a pure extra exchange paid inside the checkpoint
-        # materialization (measured: 5.6 → 2.7-3.2 s on the sf0.1
-        # projection, identical output hash)
+        # no second _wide: while the degree-filter side broadcasts (the
+        # small regime), the semi-join keeps e's spread partitioning and
+        # a repartition here was a pure extra exchange paid inside the
+        # checkpoint materialization (measured: 5.6 → 2.7-3.2 s on the
+        # sf0.1 projection, identical output hash). Past the broadcast
+        # threshold it plans a shuffle semi-join and the result is
+        # dst-hashed instead; values are the same either way.
         e = e.join(ok, "dst", "left_semi").localCheckpoint(eager=True)
     a = e.select(F.col("src").alias("src_a"), "dst")
     b = e.select(F.col("src").alias("src_b"), "dst")

@@ -5,10 +5,10 @@ Reference semantics (``/root/reference/src/PageRank/PageRank.java``):
 * 8 fixed iterations driven from ``main`` (``PageRank.java:473-488``);
   each Hadoop iteration re-reads and rewrites the full graph+rank state
   from/to HDFS. Here the loop body is a lazy
-  ``join → explode → groupBy.agg`` plan over cached DataFrames — state
-  never leaves memory; ``localCheckpoint`` every few iterations bounds
-  lineage/plan growth (the Spark-idiomatic replacement for the
-  reference's per-iteration disk materialization).
+  ``explode → groupBy.agg → join`` plan over a checkpointed adjacency —
+  state never leaves memory; a lazy ``localCheckpoint`` every few
+  iterations bounds lineage/plan growth (the Spark-idiomatic
+  replacement for the reference's per-iteration disk materialization).
 * iteration-0 seeding: every page starts at ``1/N``
   (``PageRank.java:258-264``).
 * update rule: ``rank' = 0.15/N + 0.85 * Σ incoming rank/outdeg``
@@ -23,43 +23,49 @@ Reference semantics (``/root/reference/src/PageRank/PageRank.java``):
 
 Scale notes (100 TB posture):
 
-* The per-iteration join ``adjacency ⋈ ranks`` shuffles both sides on
-  ``id``. We ``repartition(id)`` the static adjacency ONCE and cache
-  it; ranks come out of the previous iteration's ``groupBy(id)`` with
-  the same hash partitioning, so Catalyst/AQE reuses the exchange
-  instead of re-shuffling the big adjacency every iteration.
-* The contribution explode is map-side; the following ``groupBy(dst)``
-  does partial (map-side) aggregation before the shuffle — the
-  Spark equivalent of the reference's hand-rolled HashSet combiner
-  (``PageRank.java:91-93``), for free.
-* No ``collect()`` of rank state; the only driver-side scalar is N
-  (same round-trip the reference does via a Hadoop counter,
-  ``PageRank.java:470-471``).
+* The adjacency ``(id, outlinks, outdeg)`` is laid out by ONE shuffle
+  (:func:`layout_adjacency`) and materialized by ONE job, an eager
+  ``localCheckpoint`` that also yields N through an ``Observation`` —
+  the reference pays a whole MapReduce job plus a counter side-channel
+  for N (``PageRank.java:205-238,470-471``).
+* One round is one shuffle — the co-partitioned links/ranks loop of the
+  RDD paper (Zaharia et al., NSDI 2012). The state row is
+  ``(id, outlinks, outdeg, rank)``; its contributions are exploded
+  map-side and summed by ``groupBy(id)``, whose partial (map-side)
+  aggregation is the Spark equivalent of the reference's hand-rolled
+  HashSet combiner (``PageRank.java:91-93``). The sums come out
+  hash-partitioned on ``id`` at the layout's width, so joining them
+  back onto the layout to form the next state moves no adjacency.
+* Corrected mode routes every dangling vertex's rank to the NULL key
+  of that same aggregation (outlinks never hold NULL, and a NULL key
+  joins no vertex). The redistributed mass then reaches every row
+  through a 1-row aggregate crossed with the state: a p×1 product, no
+  broadcast, no extra pass over the state.
+* The whole loop is planned inside ``graph._loop_shuffle_scope`` at
+  the edge list's stats-derived width, and its result is a lazy
+  checkpoint: on a small graph no round starts a job of its own, and
+  the caller's action runs the rounds as the stages of one job. At
+  production width the scope is a no-op.
+* No ``collect()`` of rank state; the only driver-side scalar is N.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from pagerank_hadoop_spark import runtime_counters
+from pagerank_hadoop_spark.operators.graph import _edge_partitions, _loop_shuffle_scope
 
 DAMPING = 0.85
-TELEPORT = 0.15
 
-# target vertices per task in iterative loops: small graphs collapse to
-# a handful of partitions (32 near-empty tasks per iteration is pure
-# scheduler overhead — measured 2x on the sf0.1 bench); a 1e9-vertex
-# graph still fans out to ~10k tasks, far above any shuffle_partitions
-# default, and AQE coalesces from there
-ROWS_PER_ITER_TASK = 100_000
-
-
-def _iter_partitions(n: int, shuffle_parts: int) -> int:
-    """Partition count for iterative state: ~ROWS_PER_ITER_TASK rows
-    per task, never more than the session's shuffle partitions for
-    small graphs, never fewer than shuffle partitions for big ones."""
-    need = -(-n // ROWS_PER_ITER_TASK)
-    return max(1, min(shuffle_parts, need)) if need < shuffle_parts else shuffle_parts
+# Edge-list bytes (plan-statistics estimate) per task of a PageRank
+# loop: about 100k vertices per task at ~10 outlinks of ~30 B each.
+# Below that a round's fixed per-task cost outweighs its rows. Measured
+# on a 4-core VM (local[4]): a 20k-vertex / 150k-edge graph ran its
+# first execution ~25% cheaper in CPU on 1 partition than on 2, and a
+# 5k-page wiki graph ran warm executions ~30% cheaper on 1 partition
+# than on 4, at equal or better wall time.
+_LOOP_TASK_BYTES = 32 << 20
 
 
 def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
@@ -80,20 +86,70 @@ def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return e.groupBy(F.col("src").alias("id")).agg(agg.alias("outlinks"))
 
 
-def _with_dangling(adjacency: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Ensure every vertex has an adjacency row (possibly empty array).
-
-    The reference guarantees this structurally: every page emits a
-    ``(title,"!")`` marker (``PageRank.java:80``) so dangling pages
-    still appear with an empty outlink list (``PageRank.java:196-197``).
-    """
-    if vertices is None:
-        return adjacency
-    v = vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
-    return (
-        v.join(adjacency, "id", "left")
-        .select("id", F.coalesce("outlinks", F.array().cast("array<string>")).alias("outlinks"))
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize ``df`` with one eager ``localCheckpoint``; its row
+    count rides along as an observed metric, so it costs no job."""
+    obs = Observation("rows")
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
     )
+    return pinned, obs.get["rows"]
+
+
+def layout_adjacency(
+    edges: DataFrame,
+    parts: int,
+    *,
+    vertices: DataFrame | None = None,
+    max_fanout: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Edges ``(src, dst)`` → ``(adjacency, N)`` in one Spark job.
+
+    The adjacency ``(id, outlinks, outdeg)`` has one row per vertex
+    with its sorted, deduplicated outlinks (the reference's HashSet,
+    ``PageRank.java:91-93``), hash-partitioned on ``id`` and sorted
+    within partitions, checkpointed. ``(src → dst)`` rows and
+    ``(dst → NULL)`` rows are grouped by ``id`` in one shuffle;
+    ``collect_set`` drops the NULL, so a vertex with no outlinks gets
+    ``[]`` — the reference's ``(title, "!")`` marker
+    (``PageRank.java:80,196-197``). With ``vertices`` (one column),
+    the vertex set is exactly that column's distinct values: edge rows
+    whose ``src`` is not a vertex are dropped, and outlinks may still
+    name non-vertices (their rank share is lost, as in the reference's
+    red-link semantics).
+
+    ``parts`` is the layout width; it must be chosen before N is known
+    (``graph._edge_partitions`` reads it off plan statistics, no job)
+    and run under a matching ``_loop_shuffle_scope`` so the aggregation
+    lands on exactly ``parts`` partitions. ``max_fanout`` chunks hot
+    rows (:func:`_chunked_adjacency`).
+    """
+    links = edges.select(F.col("src").alias("id"), "dst")
+    no_dst = F.lit(None).cast(edges.schema["dst"].dataType).alias("dst")
+    outlinks = F.array_sort(F.collect_set("dst")).alias("outlinks")
+    if vertices is None:
+        marks = edges.select(F.col("dst").alias("id"), no_dst)
+        adjacency = links.unionByName(marks).groupBy("id").agg(outlinks)
+    else:
+        marks = vertices.select(
+            F.col(vertices.columns[0]).alias("id"), no_dst, F.lit(True).alias("vertex")
+        )
+        adjacency = (
+            links.withColumn("vertex", F.lit(False))
+            .unionByName(marks)
+            .groupBy("id")
+            .agg(outlinks, F.max("vertex").alias("vertex"))
+            .where("vertex")
+        )
+    adjacency = adjacency.select("id", "outlinks", F.size("outlinks").alias("outdeg"))
+    if not max_fanout:
+        return _checkpoint_counted(adjacency.sortWithinPartitions("id"))
+    # count vertices before chunking repeats hot ids
+    obs = Observation("vertices")
+    counted = adjacency.observe(obs, F.count(F.lit(1)).alias("n"))
+    chunked = _chunked_adjacency(counted, max_fanout, parts)
+    pinned = chunked.sortWithinPartitions("id", "__salt").localCheckpoint(eager=True)
+    return pinned, obs.get["n"]
 
 
 _FANOUT_SALTS = 8
@@ -109,7 +165,7 @@ def _chunked_adjacency(
     producing task's partition, so no downstream setting can spread
     it; splitting must happen at layout time. Rows carry
     ``__chunk`` (0..k-1; chunk 0 doubles as the unique-vertex marker
-    for final joins) and a bounded ``__salt`` the persistent
+    for final results) and a bounded ``__salt`` the persistent
     partitioning AND the per-round join key include, so hub chunks
     land on ``_FANOUT_SALTS`` different partitions and stay there
     across rounds (rank frames replicate once per salt — (id, double)
@@ -143,7 +199,6 @@ def _chunked_adjacency(
             F.pmod(F.xxhash64("id", "__chunk"), F.lit(_FANOUT_SALTS)),
         )
         .repartition(parts, "id", "__salt")
-        .localCheckpoint(eager=True)
     )
 
 
@@ -190,215 +245,122 @@ def pagerank_with_n(
     """Run ``n_iter`` PageRank iterations; returns ``((id, rank), N)``.
 
     ``edges`` must have string-ish columns ``src, dst``. ``vertices``
-    (optional, single column) adds rank-holding nodes with no outgoing
-    edges; when omitted, the vertex set is all nodes appearing as a
-    ``src`` or ``dst`` (so dangling link targets still hold rank, as in
-    the reference where the semi-join restricts dsts to real pages).
-    N (the vertex count) is computed once as part of the run — callers
-    needing it for thresholds (rank > k/N) should use this instead of
-    re-counting.
+    (optional, single column) fixes the vertex set, adding rank-holding
+    nodes with no outgoing edges; when omitted, the vertex set is all
+    nodes appearing as a ``src`` or ``dst`` (so dangling link targets
+    still hold rank, as in the reference where the semi-join restricts
+    dsts to real pages). N (the vertex count) comes out of the layout
+    job — callers needing it for thresholds (rank > k/N) should use
+    this instead of re-counting.
+
+    The returned ranks are a lazy checkpoint: building them runs one
+    Spark job (the adjacency layout), and the caller's first action
+    runs every round.
 
     ``init_ranks`` (optional ``(id, rank)``) RESUMES the recurrence
     from a saved state instead of the uniform 1/N seed — the
     checkpoint/restart path an hours-long 100 TB run needs: persist
     ranks every K iterations with ``df.write.parquet``, and on
     preemption resume with the remaining iteration budget. Resuming
-    is exact: iterations are a pure function of (adjacency, ranks),
-    so k iterations from a saved state after j iterations equal
-    j + k straight iterations (unit-pinned and oracle-gated as
-    ``pagerank_resume``).
+    is exact: rounds are a pure function of (adjacency, ranks) and
+    resumed rounds run the same kernel, so k iterations from a saved
+    state after j iterations equal j + k straight iterations
+    (unit-pinned bitwise and oracle-gated as ``pagerank_resume``). A
+    vertex missing from ``init_ranks`` starts at the teleport baseline
+    in parity mode and at 0 in corrected mode.
 
     ``max_fanout`` (off by default): cap outlinks-per-adjacency-row by
     chunking hot rows at layout time (``_chunked_adjacency``) — the
     hub-skew escape hatch. A vertex holding 20 % of all edges
     otherwise fans its messages out of ONE task per iteration
     (explode output never leaves the producing task), which bounds
-    stage wall at any cluster size. Chunked mode keys the
-    per-iteration join on (id, salt) against salt-replicated rank
-    frames, so results can differ from the unsalted run in the last
-    ulp (partial sums regroup); the registry entries run unchunked.
+    stage wall at any cluster size. Chunked mode joins the round's
+    sums back on (id, salt) against salt-replicated sum frames, so
+    results can differ from the unsalted run in the last ulp (partial
+    sums regroup); the registry entries run unchunked.
     """
     spark = edges.sparkSession
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
+    parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
+    with _loop_shuffle_scope(spark, parts):
+        adjacency, n = layout_adjacency(
+            edges, parts, vertices=vertices, max_fanout=max_fanout
         )
-    adjacency = _with_dangling(adjacency_from_edges(edges), vertices)
-
-    # Static side of every iteration's join: partition once on id, keep hot.
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()  # driver-side scalar, as PageRank.java:470-471
-    if n == 0:
-        return spark.createDataFrame([], "id string, rank double"), 0
-    # Now that N is known, right-size the iteration partitioning: for a
-    # graph far smaller than shuffle_parts x ROWS_PER_ITER_TASK, re-lay
-    # the (tiny, already-materialized) adjacency onto fewer partitions
-    # so the 8-iteration loop isn't dominated by empty-task scheduling.
-    # (The rank-side shuffles stay at shuffle_parts and AQE coalesces
-    # them at runtime; what AQE can NOT fix is the partition count of
-    # the cached static side, which sets the task count of every
-    # iteration's join.)
-    parts = _iter_partitions(n, shuffle_parts)
-    if max_fanout:
-        # hub fan-out skew: split hot adjacency rows at layout time
-        # (see _chunked_adjacency) — the default path is untouched
-        old = adjacency
-        adjacency = _chunked_adjacency(old, max_fanout, parts)
-        old.unpersist()
-    elif parts < shuffle_parts:
-        old = adjacency
-        adjacency = (
-            old.withColumn("outdeg", F.size("outlinks"))
-            .repartition(parts, "id")
-            .localCheckpoint(eager=True)
+        if n == 0:
+            return spark.createDataFrame([], "id string, rank double"), 0
+        ranks = _pagerank_rounds(
+            adjacency, n, n_iter, damping, parity, checkpoint_interval, init_ranks
         )
-        old.unpersist()
-    else:
-        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
-    return _pagerank_loop(
-        adjacency,
-        n,
-        n_iter,
-        damping,
-        parity,
-        checkpoint_interval,
-        init_ranks,
-        salted=bool(max_fanout),
-    ), n
+    return ranks, n
 
 
-def _pagerank_loop(
+def _pagerank_rounds(
     adjacency: DataFrame,
     n: int,
     n_iter: int,
     damping: float,
     parity: bool,
     checkpoint_interval: int,
-    init_ranks: DataFrame | None = None,
-    salted: bool = False,
+    init_ranks: DataFrame | None,
 ) -> DataFrame:
-
+    """The round kernel over a :func:`layout_adjacency` layout; returns
+    the lazily checkpointed ``(id, rank)`` frame."""
     teleport = (1.0 - damping) / n
-    outdeg = F.col("outdeg")
-    # unique-vertex frame for seeding and final joins: chunked
-    # adjacencies repeat hot ids, so chunk 0 is the one-row-per-vertex
-    # marker (no distinct — co-partitioned filter, not a shuffle)
-    ids = (
-        adjacency.where(F.col("__chunk") == 0).select("id")
-        if salted
-        else adjacency.select("id")
-    )
+    layout_cols = adjacency.columns
+    salted = "__salt" in layout_cols
+    keys = ["id", "__salt"] if salted else ["id"]
 
-    def _rank_join(ranks: DataFrame, how: str) -> DataFrame:
-        """adjacency ⋈ ranks on id — with the salt in the key when
-        chunked, so the persistent (id, __salt) layout is the join
-        layout and hub chunks never re-co-locate."""
+    def onto_layout(frame: DataFrame) -> DataFrame:
+        """adjacency ⟕ frame on id: co-partitioned, sorted, no exchange
+        of the adjacency (chunked layouts key on the salt as well)."""
         if salted:
-            return adjacency.join(
-                _with_salt_replicas(ranks), ["id", "__salt"], how
-            )
-        return adjacency.join(ranks, "id", how)
+            frame = _with_salt_replicas(frame)
+        return adjacency.join(frame, keys, "left")
 
-    if parity:
-        # Sparse-rank loop: `ranks_sparse` holds only vertices that
-        # received messages; every other vertex's rank is exactly the
-        # teleport baseline (0.15/N — the self-shipped structure row of
-        # PageRank.java:281,305), restored by coalesce at the next
-        # join. One join per iteration instead of two (no dense
-        # left-join-back), and the shuffle carries only message
-        # receivers.
-        # iteration-0: uniform 1/N, or a saved state when resuming (a
-        # dense restart frame rides the same left-join/coalesce path a
-        # sparse message frame does — absent ids read as teleport)
-        ranks_sparse: DataFrame | None = (
-            init_ranks.select("id", "rank") if init_ranks is not None else None
-        )
-        for i in range(n_iter):
-            if ranks_sparse is None:
-                src_ranks = adjacency.select(
-                    "id", "outlinks", "outdeg", F.lit(1.0 / n).alias("rank")
-                )
-            else:
-                src_ranks = _rank_join(ranks_sparse, "left").select(
-                    "id",
-                    "outlinks",
-                    "outdeg",
-                    F.coalesce("rank", F.lit(teleport)).alias("rank"),
-                )
-            contribs = src_ranks.select(
-                F.explode("outlinks").alias("id"),
-                (F.col("rank") / outdeg).alias("contrib"),
-            )
-            ranks_sparse = (
-                contribs.groupBy("id")
-                .agg(F.sum("contrib").alias("insum"))
-                .select(
-                    "id",
-                    (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias("rank"),
-                )
-            )
-            runtime_counters.note_round()
-            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-                # truncate lineage so the plan doesn't grow unboundedly;
-                # LAZY: the final action materializes the chain in order
-                # anyway, and an eager barrier here costs one extra
-                # synchronous job round-trip per interval
-                ranks_sparse = ranks_sparse.localCheckpoint(eager=False)
-        if ranks_sparse is None:
-            return ids.select("id", F.lit(1.0 / n).alias("rank"))
-        return ids.join(ranks_sparse, "id", "left").select(
-            "id", F.coalesce("rank", F.lit(teleport)).alias("rank")
-        )
-
-    # Corrected mode: dangling mass is redistributed uniformly each
-    # iteration. The mass is a 1-row aggregate broadcast back via
-    # crossJoin — kept lazy (a per-iteration collect() would re-execute
-    # the whole lineage from scratch every iteration).
-    #
-    # Unlike the parity loop, each iteration consumes `ranks` TWICE
-    # (contribution fan-out + dangling-mass sum), so without a barrier
-    # the lineage doubles per iteration (2^k plan blowup between
-    # checkpoints — measured as a 100-exchange final plan at k=4).
-    # A lazy localCheckpoint per iteration bounds the plan to one
-    # iteration's shape; the final action materializes the chain in
-    # order, which is exactly the per-iteration work anyway.
-    # The dangling-vertex set is a static property of the adjacency —
-    # compute the id list once, not from the per-iteration join.
-    dangling = adjacency.where(outdeg == 0).select("id")
-    if init_ranks is not None:
-        ranks = init_ranks.select("id", "rank")
+    if init_ranks is None:
+        state = adjacency.withColumn("rank", F.lit(1.0 / n))
     else:
-        ranks = ids.select("id", F.lit(1.0 / n).alias("rank"))
-    for i in range(n_iter):
-        contribs = _rank_join(ranks, "inner").select(
-            F.explode("outlinks").alias("id"),
-            (F.col("rank") / outdeg).alias("contrib"),
+        missing = F.lit(teleport if parity else 0.0)
+        state = onto_layout(init_ranks.select("id", "rank")).select(
+            *layout_cols, F.coalesce("rank", missing).alias("rank")
         )
-        extra_df = ranks.join(dangling, "id", "left_semi").agg(
-            (F.lit(damping) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
-        )
-        summed = contribs.groupBy("id").agg(F.sum("contrib").alias("insum"))
-        ranks = (
-            ids
-            .join(summed, "id", "left")
-            .crossJoin(F.broadcast(extra_df))
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("insum"), F.lit(0.0))
-                    + F.col("extra")
-                ).alias("rank"),
-            )
-        )
-        runtime_counters.note_round(ranks)
-        if i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
 
-    return ranks
+    rank = F.lit(teleport) + F.lit(damping) * F.coalesce("insum", F.lit(0.0))
+    if parity:
+        target = F.explode("outlinks")
+        contrib = F.col("rank") / F.col("outdeg")
+    else:
+        # dangling rank goes to the NULL key: outlinks never hold NULL
+        # (collect_set drops it) and a NULL key joins no vertex
+        dangling = F.col("outdeg") == 0
+        no_id = F.lit(None).cast(adjacency.schema["id"].dataType)
+        target = F.explode(
+            F.when(dangling, F.array(no_id)).otherwise(F.col("outlinks"))
+        )
+        contrib = F.when(dangling, F.col("rank")).otherwise(
+            F.col("rank") / F.col("outdeg")
+        )
+        dangling_mass = F.sum(F.when(F.col("id").isNull(), F.col("insum")))
+        extra = (
+            F.lit(damping) * F.coalesce(dangling_mass, F.lit(0.0)) / n
+        ).alias("extra")
+        rank = rank + F.col("extra")
+    contribs = [target.alias("id"), contrib.alias("contrib")]
+    insum = F.sum("contrib").alias("insum")
+    next_state = [*layout_cols, rank.alias("rank")]
+    for i in range(n_iter):
+        summed = state.select(contribs).groupBy("id").agg(insum)
+        # corrected rounds read `summed` twice (sums + dangling mass):
+        # without a barrier every round the plan doubles per round
+        if not parity or ((i + 1) % checkpoint_interval == 0 and i + 1 < n_iter):
+            summed = summed.localCheckpoint(eager=False)
+        state = onto_layout(summed)
+        if not parity:
+            state = state.crossJoin(summed.agg(extra))
+        state = state.select(next_state)
+        runtime_counters.note_round()
+    if salted:
+        state = state.where(F.col("__chunk") == 0)
+    return state.select("id", "rank").localCheckpoint(eager=False)
 
 
 def top_ranks(
@@ -448,46 +410,30 @@ def personalized_pagerank(
     cannot do this; its baseline is nonzero everywhere).
     """
     spark = edges.sparkSession
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    adjacency = _with_dangling(adjacency_from_edges(edges), vertices)
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()
-    if n == 0:
-        return spark.createDataFrame([], "id string, rank double")
-    parts = _iter_partitions(n, shuffle_parts)
-    if parts < shuffle_parts:
-        old = adjacency
-        adjacency = old.repartition(parts, "id").localCheckpoint(eager=True)
-        old.unpersist()
-
-    outdeg = F.size("outlinks")
-    seed = spark.createDataFrame([(source,)], "id string")
-    ranks = seed.select("id", F.lit(1.0).alias("rank"))
-    base = seed.select("id", F.lit(1.0 - damping).alias("rank"))
-    for i in range(n_iter):
-        contribs = (
-            adjacency.join(ranks, "id")
-            .select(
+    parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
+    with _loop_shuffle_scope(spark, parts):
+        adjacency, n = layout_adjacency(edges, parts)
+        if n == 0:
+            return spark.createDataFrame([], "id string, rank double")
+        seed = spark.range(1).select(F.lit(source).cast("string").alias("id"))
+        ranks = seed.select("id", F.lit(1.0).alias("rank"))
+        base = seed.select("id", F.lit(1.0 - damping).alias("rank"))
+        for i in range(n_iter):
+            contribs = adjacency.join(ranks, "id").select(
                 F.explode("outlinks").alias("id"),
-                (F.col("rank") / outdeg * damping).alias("rank"),
+                (F.col("rank") / F.col("outdeg") * damping).alias("rank"),
             )
-        )
-        # teleport lands only on the source; propagated mass unions in
-        # and the per-vertex sum collapses both — still sparse
-        ranks = (
-            base.unionByName(contribs)
-            .groupBy("id")
-            .agg(F.sum("rank").alias("rank"))
-        )
-        runtime_counters.note_round()
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+            # teleport lands only on the source; propagated mass unions
+            # in and the per-vertex sum collapses both — still sparse
+            ranks = (
+                base.unionByName(contribs)
+                .groupBy("id")
+                .agg(F.sum("rank").alias("rank"))
+            )
+            runtime_counters.note_round()
+            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
+                ranks = ranks.localCheckpoint(eager=False)
+        return ranks.localCheckpoint(eager=False)
 
 
 def weighted_pagerank(
@@ -507,8 +453,8 @@ def weighted_pagerank(
     Same scale posture as the uniform loop: the weighted adjacency
     (id → array<struct<dst, wfrac>>) is built once with weights
     pre-normalized (the per-iteration join never re-aggregates W(u)),
-    partitioned on id, and cached; dangling mass is lost
-    (parity-mode semantics)."""
+    partitioned on id and checkpointed in one job that also counts N;
+    dangling mass is lost (parity-mode semantics)."""
     spark = edges.sparkSession
     w_edges = edges.groupBy("src", "dst").agg(
         F.sum("weight").alias("w")
@@ -537,22 +483,25 @@ def weighted_pagerank(
     adjacency = vertices.join(adjacency, "id", "left").select(
         "id", F.coalesce("outs", F.array()).alias("outs")
     )
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()
-    if n == 0:
-        return spark.createDataFrame([], "id string, rank double")
-    parts = _iter_partitions(n, shuffle_parts)
-    if parts < shuffle_parts:
-        old = adjacency
-        adjacency = old.repartition(parts, "id").localCheckpoint(eager=True)
-        old.unpersist()
+    parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
+    with _loop_shuffle_scope(spark, parts):
+        adjacency, n = _checkpoint_counted(adjacency.sortWithinPartitions("id"))
+        if n == 0:
+            return spark.createDataFrame([], "id string, rank double")
+        return _weighted_rounds(adjacency, n, n_iter, damping, checkpoint_interval)
 
-    # Sparse-rank loop, as the parity-mode uniform loop: a vertex with
-    # no incoming weighted mass holds exactly the teleport baseline,
-    # so `ranks_sparse` carries only message receivers and each
-    # iteration is ONE join (state onto adjacency) instead of a join
-    # plus a dense left-join-back. Identical values (oracle-pinned).
+
+def _weighted_rounds(
+    adjacency: DataFrame,
+    n: int,
+    n_iter: int,
+    damping: float,
+    checkpoint_interval: int,
+) -> DataFrame:
+    # Sparse-rank loop: a vertex with no incoming weighted mass holds
+    # exactly the teleport baseline, so `ranks_sparse` carries only
+    # message receivers and each iteration is ONE join (state onto
+    # adjacency) instead of a join plus a dense left-join-back.
     teleport = (1.0 - damping) / n
     ranks_sparse: DataFrame | None = None
     for i in range(n_iter):
@@ -587,6 +536,7 @@ def weighted_pagerank(
             ranks_sparse = ranks_sparse.localCheckpoint(eager=False)
     if ranks_sparse is None:
         return adjacency.select("id", F.lit(1.0 / n).alias("rank"))
-    return adjacency.select("id").join(ranks_sparse, "id", "left").select(
+    ranks = adjacency.select("id").join(ranks_sparse, "id", "left").select(
         "id", F.coalesce("rank", F.lit(teleport)).alias("rank")
     )
+    return ranks.localCheckpoint(eager=False)

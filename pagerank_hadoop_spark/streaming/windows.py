@@ -251,7 +251,7 @@ def stream_shuffle_partitions(spark: SparkSession, source_bytes: int):
     the session's batch-oriented 32 partitions over a small stream,
     that fixed cost dominates (measured 3.9 s → 0.9 s on the sf0.1
     tumbling query at 8 partitions). Same principle as the graph
-    loops' ``_iter_partitions``: task count follows data, floor 8 so
+    loops' ``_edge_partitions``: task count follows data, floor 8 so
     the test shape keeps real parallelism, session default as the
     ceiling for big sources. Production sizing tracks sustained
     events/sec instead of a file size — state-store count is the

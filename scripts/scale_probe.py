@@ -20,8 +20,10 @@ driver-bound (loop-round latency), not that cpus are ignored.
 Usage:
     python scripts/scale_probe.py [--top N] [name ...]
 
-Defaults: top 10 of BENCH_FULL.json. The synth SF is built once into
-/tmp/sf1_synth (~10x sf0.1) and reused. bench.py itself is untouched
+Defaults: top 10 of BENCH_FULL.json; ``--top N`` takes the N slowest
+and appends any names given after it. The synth SF is built once into
+/tmp/sf1_synth (~10x sf0.1) and reused once its ``_COMPLETE`` marker
+exists. bench.py itself is untouched
 — this tool is additive, outside the driver's bench path.
 """
 
@@ -30,17 +32,19 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SYNTH_DIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/sf1_synth")
+# written only after make_synth_sf.py exits cleanly, so a directory left
+# half-built by a crashed run is rebuilt instead of reused
+SYNTH_DONE = os.path.join(SYNTH_DIR, "_COMPLETE")
 
 
 def ensure_synth() -> None:
-    if os.path.isdir(SYNTH_DIR) and any(
-        f.endswith(".parquet") for f in os.listdir(SYNTH_DIR)
-    ):
+    if os.path.exists(SYNTH_DONE):
         return
     print(f"# building {SYNTH_DIR} (10x sf0.1)...", file=sys.stderr)
     subprocess.run(
@@ -54,27 +58,24 @@ def ensure_synth() -> None:
         check=True,
         cwd=ROOT,
     )
+    open(SYNTH_DONE, "w").close()
 
 
 def pick_names(argv: list[str]) -> list[str]:
+    """``[--top N] [name ...]``: the N slowest queries of
+    BENCH_FULL.json (N = 10 when no names are given) followed by the
+    named ones, each once."""
+    top = 0 if argv else 10
     if argv and argv[0] == "--top":
-        n = int(argv[1])
-        full = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))
-        return [
-            k
-            for k, _ in sorted(
-                full["queries"].items(), key=lambda kv: -kv[1]
-            )[:n]
-        ]
-    if argv:
-        return argv
-    full = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))
-    return [
-        k
-        for k, _ in sorted(full["queries"].items(), key=lambda kv: -kv[1])[
-            :10
-        ]
-    ]
+        top, argv = int(argv[1]), argv[2:]
+    names: list[str] = []
+    if top:
+        with open(os.path.join(ROOT, "BENCH_FULL.json")) as f:
+            full = json.load(f)
+        names = [
+            k for k, _ in sorted(full["queries"].items(), key=lambda kv: -kv[1])
+        ][:top]
+    return names + [n for n in argv if n not in names]
 
 
 _RUN_RE = re.compile(r"^# run\d+ (\S+): ([0-9.]+)s")
@@ -122,8 +123,7 @@ def main() -> None:
             r = round(t8[n] / t32[n], 3)
             queries[n] = {"c8": t8[n], "c32": t32[n], "ratio": r}
             ratios.append(r)
-    ratios.sort()
-    median = ratios[len(ratios) // 2] if ratios else None
+    median = statistics.median(ratios) if ratios else None
     print(
         json.dumps(
             {

@@ -618,3 +618,26 @@ def test_containment_join_directed_asymmetric(spark):
         for r in containment_join(docs, threshold=0.9).collect()
     }
     assert got == {(2, 1): 1000000, (2, 3): 1000000}
+
+
+def test_spread_reads_size_suffixed_max_partition_bytes(spark):
+    """``spark.sql.files.maxPartitionBytes`` may be set as ``128m``;
+    the small-input spread must parse it, not fail closed."""
+    from pagerank_hadoop_spark.operators.dedup import _conf_bytes, _spread
+
+    assert _conf_bytes("128m") == 128 << 20
+    assert _conf_bytes("64MB") == 64 << 20
+    assert _conf_bytes("1g") == 1 << 30
+    assert _conf_bytes("134217728") == 128 << 20
+    with pytest.raises(ValueError):
+        _conf_bytes("lots")
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        spread = _spread(spark.range(10).coalesce(1))
+        target = spark.sparkContext.defaultParallelism
+        assert spread.rdd.getNumPartitions() == target
+    finally:
+        spark.conf.set(key, prev)

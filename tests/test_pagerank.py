@@ -235,8 +235,7 @@ def test_chunked_adjacency_spreads_hub_and_keeps_dangling(spark):
 
     from pagerank_hadoop_spark.operators.pagerank import (
         _chunked_adjacency,
-        _with_dangling,
-        adjacency_from_edges,
+        layout_adjacency,
     )
 
     hub_edges = [("h", f"v{i}") for i in range(40)]
@@ -244,7 +243,8 @@ def test_chunked_adjacency_spreads_hub_and_keeps_dangling(spark):
     verts = spark.createDataFrame(
         [("h",)] + [(f"v{i}",) for i in range(40)] + [("lonely",)], ["id"]
     )
-    adj = _with_dangling(adjacency_from_edges(edges), verts)
+    adj, n = layout_adjacency(edges, 16, vertices=verts)
+    assert n == 42
     chunked = _chunked_adjacency(adj, max_fanout=5, parts=16)
 
     hub = chunked.where(F.col("id") == "h").select(
@@ -284,3 +284,143 @@ def test_chunked_adjacency_non_string_vertex_ids(spark):
     dangling = chunked.where(F.col("id") == 2).collect()
     assert len(dangling) == 1
     assert dangling[0].outdeg == 0 and dangling[0].outlinks == []
+
+
+def _small_graph(spark):
+    """2-cycle, 3-star (dangling spokes) and K3 as one edge list."""
+    return spark.createDataFrame(CYCLE2 + STAR3 + K3, "src string, dst string")
+
+
+def test_pagerank_leaves_no_cached_state(spark):
+    """Nothing a PageRank run builds stays in the CacheManager, also at
+    production width (``parts >= shuffle.partitions``), where the loop
+    scope is a no-op."""
+    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.catalog.clearCache()
+    spark.conf.set(key, "1")
+    try:
+        for parity in (True, False):
+            ranks, n = pagerank_with_n(_small_graph(spark), parity=parity)
+            assert len(ranks.collect()) == n == 9
+    finally:
+        spark.conf.set(key, prev)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pagerank_build_and_rounds_run_few_jobs(spark):
+    """Building the ranks runs one job (the adjacency layout, which also
+    yields N); no round starts a job of its own, so build plus collect
+    stays within a handful of jobs in both modes."""
+    from pyspark.sql import functions as F
+
+    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+
+    # a range-derived graph carries plan statistics, like a file scan
+    ids = spark.range(300)
+    edges = ids.select(
+        F.col("id").cast("string").alias("src"),
+        ((F.col("id") * 7 + 1) % 400).cast("string").alias("dst"),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for parity in (True, False):
+        group = f"pagerank-jobs-{parity}"
+        sc.setJobGroup(group, group)
+        try:
+            ranks, n = pagerank_with_n(edges, n_iter=8, parity=parity)
+            build = len(tracker.getJobIdsForGroup(group))
+            rows = ranks.collect()
+            total = len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == n
+        assert build <= 2, (parity, build)
+        assert total <= 6, (parity, total)
+
+
+def _family_ranks(spark, edges, source):
+    from pagerank_hadoop_spark.operators.pagerank import (
+        pagerank_with_n,
+        personalized_pagerank,
+    )
+
+    out = {}
+    for parity in (True, False):
+        ranks, _ = pagerank_with_n(edges, n_iter=8, parity=parity)
+        out[parity] = {r.id: r.rank for r in ranks.collect()}
+    ppr = personalized_pagerank(edges, source, n_iter=8)
+    out["ppr"] = {r.id: r.rank for r in ppr.collect()}
+    return out
+
+
+def test_pagerank_family_invariant_to_width_and_aqe(spark, sf_dir):
+    """Ranks of uniform (both modes) and personalized PageRank agree to
+    1e-12 across shuffle partitions {1, 4, 32} x AQE on/off — on a
+    small golden graph and on the sf0.001 part→supplier graph."""
+    from pagerank_hadoop_spark.queries import _pagerank_edges
+
+    graphs = [(_small_graph(spark), "a"), (_pagerank_edges(spark, sf_dir), "1")]
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = [spark.conf.get(k) for k in keys]
+    runs = []
+    try:
+        for width in ("1", "4", "32"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], width)
+                spark.conf.set(keys[1], aqe)
+                runs.append(
+                    ((width, aqe), [_family_ranks(spark, *g) for g in graphs])
+                )
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    (_, base), *rest = runs
+    for setting, got in rest:
+        for want_g, got_g in zip(base, got):
+            for variant, want in want_g.items():
+                ranks = got_g[variant]
+                assert ranks.keys() == want.keys(), (setting, variant)
+                worst = max(abs(ranks[k] - want[k]) for k in want)
+                assert worst <= 1e-12, (setting, variant, worst)
+
+
+def _check_oracle_module():
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "check_oracle.py",
+    )
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_topk",
+        "pagerank_iter1",
+        "pagerank_corrected",
+        "pagerank_resume",
+        "wiki_pagerank",
+        "ppr_from_part",
+    ],
+)
+def test_pagerank_family_matches_oracle(spark, name):
+    """``scripts/check_oracle.py``'s comparison at sf0.01: row count,
+    column names and the order-insensitive 9-dp value hash against the
+    DuckDB oracle."""
+    from pagerank_hadoop_spark import queries as Q
+
+    co = _check_oracle_module()
+    oracles = Q.oracle_sql()
+    assert name in oracles
+    ok, report = co.check(name, spark, co.connect(), Q.queries(), oracles)
+    assert ok, report
