@@ -1,5 +1,4 @@
 from pagerank_hadoop_spark.operators.pagerank import (  # noqa: F401
-    adjacency_from_edges,
     pagerank,
     top_ranks,
 )

@@ -189,33 +189,6 @@ def minhash_signature(shingle_hashes: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def minhash_band_hashes(
-    text: Column, num_hashes: int = 32, bands: int = 4, shingle_n: int = 5
-) -> Column:
-    """Per-band LSH bucket keys (array<bigint> of length ``bands``) in
-    ONE aggregate pass: shingling → signature (accumulator) → band
-    hashing (finish lambda, where the signature is a bound value and
-    can be sliced ``bands`` times for free)."""
-    p = _MINHASH_P
-    rows = num_hashes // bands
-    init = F.array_repeat(F.lit(p).cast("long"), num_hashes)
-    ids = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
-    return F.aggregate(
-        shingles(text, shingle_n),
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            ids,
-            lambda m, i: F.least(m, (F.pmod(x, F.lit(p)) * (i * 2 + 1) + (i + 1) * 104729) % p),
-        ),
-        lambda sig: F.transform(
-            band_ids,
-            lambda b: F.xxhash64(F.slice(sig, b * rows + 1, rows).cast("string")),
-        ),
-    )
-
-
 def _minhash_sig_arrow(num_hashes: int):
     """Arrow-batched NumPy twin of :func:`minhash_signature` —
     bit-identical output (same hash family/constants, and NumPy's

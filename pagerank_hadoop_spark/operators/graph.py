@@ -84,12 +84,16 @@ def _loop_shuffle_scope(spark, parts: int | None):
     32-wide rounds are pure scheduling overhead (measured -33%/-36%
     on scc/bfs wall at sf0.1). At production scale the stats-derived
     count reaches the session default and this is a no-op; it only
-    ever narrows, never widens. Restores the session value even on
-    error. Loops whose aggregates are order-insensitive and exact
-    (min / mode / count / bool-or on ids) cannot move results here.
-    Float-sum loops can, in the last ulp, because narrowing regroups
-    partial sums; the PageRank loops (uniform, personalized, weighted)
-    run in this scope on measured evidence: at sf0.01 the 9-dp oracle
+    ever narrows, never widens. When it narrows, it also turns off
+    AQE, the runtime bloom filter and broadcast-join planning for the
+    scope (the evidence is in the comment at the conf sets). Restores
+    the session values even on error. Loops whose aggregates are
+    order-insensitive and exact (min / mode / count / bool-or on ids)
+    cannot move results here. Float-sum loops can, in the last ulp,
+    because narrowing regroups partial sums; the PageRank kernel
+    (``pagerank._pagerank_rounds``, which runs the uniform,
+    personalized and weighted variants) runs in this scope on
+    measured evidence: at sf0.01 the 9-dp oracle
     hashes of pagerank_topk, pagerank_iter1, pagerank_corrected,
     pagerank_resume, wiki_pagerank, ppr_from_part and
     weighted_pagerank_topk are identical in and out of it; both
@@ -132,24 +136,15 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # filters stay on. Both knobs are physical-only: the same rows
     # flow either way (see above for the float-sum loops).
     # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
-    # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
-    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.
-    # SPARK_GRAFT_LOOP_LEAN=0 restores session AQE/bloom inside the
-    # narrowed scope — the measurement toggle behind those numbers.)
-    import os as _os
-
-    lean = _os.environ.get("SPARK_GRAFT_LOOP_LEAN", "1") != "0"
-    # r16: in the SAME narrowed regime, also stop PLANNING broadcast
-    # joins. A lazy localCheckpoint's toRdd blocks on every
-    # BroadcastExchange build in the round's plan (driver collect +
-    # rebroadcast, ~2 driver round trips per join per round — the
-    # measured per-round floor of the r15 dissection), while a
-    # shuffle join over 1-3-partition loop state is a tiny exchange
-    # that executes lazily inside the round's one counting job. Join
-    # STRATEGY cannot move results (same rows either way). At
-    # production width the scope is a no-op and broadcast planning
-    # stays on. SPARK_GRAFT_LOOP_NOBCAST=0 is the A/B toggle.
-    nobcast = lean and _os.environ.get("SPARK_GRAFT_LOOP_NOBCAST", "1") != "0"
+    # scoped off vs 13.0/10.4 s session AQE, sssp 7.8/8.4 vs 12.5/8.6,
+    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
+    # In the same regime, also stop PLANNING broadcast joins. A lazy
+    # localCheckpoint's toRdd blocks on every BroadcastExchange build
+    # in the round's plan (driver collect + rebroadcast, ~2 driver
+    # round trips per join per round — the measured per-round floor),
+    # while a shuffle join over 1-3-partition loop state is a tiny
+    # exchange that executes lazily inside the round's one counting
+    # job. Join STRATEGY cannot move results (same rows either way).
     aqe_key = "spark.sql.adaptive.enabled"
     bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     bcast_key = "spark.sql.autoBroadcastJoinThreshold"
@@ -161,11 +156,9 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # above) instead of leaving the session narrowed for its lifetime
     try:
         spark.conf.set(key, str(parts))
-        if lean:
-            spark.conf.set(aqe_key, "false")
-            spark.conf.set(bloom_key, "false")
-        if nobcast:
-            spark.conf.set(bcast_key, "-1")
+        spark.conf.set(aqe_key, "false")
+        spark.conf.set(bloom_key, "false")
+        spark.conf.set(bcast_key, "-1")
         yield
     finally:
         spark.conf.set(key, str(current))

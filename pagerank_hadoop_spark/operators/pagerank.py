@@ -20,6 +20,13 @@ Reference semantics (``/root/reference/src/PageRank/PageRank.java``):
   outlinks is LOST (never redistributed), so ranks do not sum to 1.
   ``parity=False`` redistributes dangling mass uniformly (textbook
   PageRank; ranks sum to 1).
+* every variant is that recurrence with three inputs, as in GraphX's
+  Pregel-based PageRank (Malewicz et al., SIGMOD 2010): a teleport
+  vector, an edge share and a dangling policy. Personalized PageRank
+  puts seed and teleport on one vertex; weighted PageRank ships
+  ``rank·w/W`` instead of ``rank/outdeg``. All of them run the one
+  adjacency layout (:func:`layout_adjacency`) and the one round
+  kernel (:func:`_pagerank_rounds`).
 
 Scale notes (100 TB posture):
 
@@ -36,6 +43,8 @@ Scale notes (100 TB posture):
   HashSet combiner (``PageRank.java:91-93``). The sums come out
   hash-partitioned on ``id`` at the layout's width, so joining them
   back onto the layout to form the next state moves no adjacency.
+  Rows holding rank 0 send nothing, so a personalized round shuffles
+  only the frontier reached from its seed.
 * Corrected mode routes every dangling vertex's rank to the NULL key
   of that same aggregation (outlinks never hold NULL, and a NULL key
   joins no vertex). The redistributed mass then reaches every row
@@ -51,7 +60,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from pagerank_hadoop_spark import runtime_counters
 from pagerank_hadoop_spark.operators.graph import _edge_partitions, _loop_shuffle_scope
@@ -68,32 +77,10 @@ DAMPING = 0.85
 _LOOP_TASK_BYTES = 32 << 20
 
 
-def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """Edges ``(src, dst)`` → adjacency ``(id, outlinks array)``.
-
-    The Spark form of the reference's tab-packed adjacency build
-    (``RedLinksReducer``, ``PageRank.java:175-200``): a first-class
-    ``array<>`` column instead of a tab-joined string. ``sort_array``
-    makes the result deterministic (the reference inherits arbitrary
-    shuffle order).
-    """
-    e = edges.select("src", "dst")
-    if dedup:
-        # per-src dedup, as the reference's HashSet (PageRank.java:91-93)
-        agg = F.array_sort(F.collect_set("dst"))
-    else:
-        agg = F.array_sort(F.collect_list("dst"))
-    return e.groupBy(F.col("src").alias("id")).agg(agg.alias("outlinks"))
-
-
-def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize ``df`` with one eager ``localCheckpoint``; its row
-    count rides along as an observed metric, so it costs no job."""
-    obs = Observation("rows")
-    pinned = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-        eager=True
-    )
-    return pinned, obs.get["rows"]
+# Edge column that makes :func:`layout_adjacency` lay out normalized
+# edge weights. :func:`weighted_pagerank` sets it on (src, dst)-summed
+# edges, so a caller's own edge attributes never switch the layout.
+_WEIGHT = "__weight"
 
 
 def layout_adjacency(
@@ -118,37 +105,67 @@ def layout_adjacency(
     name non-vertices (their rank share is lost, as in the reference's
     red-link semantics).
 
+    Edges with a ``__weight`` column (one row per ``(src, dst)``) lay
+    out ``(id, wlinks, outdeg)`` instead: ``wlinks`` is the sorted
+    ``array<struct<id, wfrac>>`` of outlinks, each weight divided by
+    its source's total, which the same aggregation sums.
+
     ``parts`` is the layout width; it must be chosen before N is known
     (``graph._edge_partitions`` reads it off plan statistics, no job)
     and run under a matching ``_loop_shuffle_scope`` so the aggregation
     lands on exactly ``parts`` partitions. ``max_fanout`` chunks hot
-    rows (:func:`_chunked_adjacency`).
+    rows of an unweighted layout (:func:`_chunked_adjacency`).
     """
-    links = edges.select(F.col("src").alias("id"), "dst")
+    weighted = _WEIGHT in edges.columns
+    weight = [_WEIGHT] if weighted else []
+    links = edges.select(F.col("src").alias("id"), "dst", *weight)
     no_dst = F.lit(None).cast(edges.schema["dst"].dataType).alias("dst")
-    outlinks = F.array_sort(F.collect_set("dst")).alias("outlinks")
+    if weighted:
+        link = F.struct(F.col("dst").alias("id"), F.col(_WEIGHT).alias("w"))
+        grouped = [
+            F.array_sort(F.collect_list(F.when(F.col("dst").isNotNull(), link)))
+            .alias("links"),
+            F.sum(_WEIGHT).alias("total"),
+        ]
+        wlinks = F.transform(
+            "links",
+            lambda e: F.struct(
+                e["id"].alias("id"), (e["w"] / F.col("total")).alias("wfrac")
+            ),
+        )
+        shape = [wlinks.alias("wlinks"), F.size("links").alias("outdeg")]
+    else:
+        grouped = [F.array_sort(F.collect_set("dst")).alias("outlinks")]
+        shape = ["outlinks", F.size("outlinks").alias("outdeg")]
     if vertices is None:
         marks = edges.select(F.col("dst").alias("id"), no_dst)
-        adjacency = links.unionByName(marks).groupBy("id").agg(outlinks)
+        adjacency = (
+            links.unionByName(marks, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(*grouped)
+        )
     else:
         marks = vertices.select(
             F.col(vertices.columns[0]).alias("id"), no_dst, F.lit(True).alias("vertex")
         )
         adjacency = (
             links.withColumn("vertex", F.lit(False))
-            .unionByName(marks)
+            .unionByName(marks, allowMissingColumns=True)
             .groupBy("id")
-            .agg(outlinks, F.max("vertex").alias("vertex"))
+            .agg(*grouped, F.max("vertex").alias("vertex"))
             .where("vertex")
         )
-    adjacency = adjacency.select("id", "outlinks", F.size("outlinks").alias("outdeg"))
-    if not max_fanout:
-        return _checkpoint_counted(adjacency.sortWithinPartitions("id"))
-    # count vertices before chunking repeats hot ids
+    # N rides along as an observed metric (no job of its own), counted
+    # before chunking repeats hot ids
     obs = Observation("vertices")
-    counted = adjacency.observe(obs, F.count(F.lit(1)).alias("n"))
-    chunked = _chunked_adjacency(counted, max_fanout, parts)
-    pinned = chunked.sortWithinPartitions("id", "__salt").localCheckpoint(eager=True)
+    adjacency = adjacency.select("id", *shape).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    )
+    order = ["id"]
+    if max_fanout:
+        adjacency = _chunked_adjacency(adjacency, max_fanout, parts)
+        order.append("__salt")
+    pinned = adjacency.sortWithinPartitions(*order).localCheckpoint(eager=True)
     return pinned, obs.get["n"]
 
 
@@ -199,12 +216,6 @@ def _chunked_adjacency(
             F.pmod(F.xxhash64("id", "__chunk"), F.lit(_FANOUT_SALTS)),
         )
         .repartition(parts, "id", "__salt")
-    )
-
-
-def _with_salt_replicas(ranks: DataFrame) -> DataFrame:
-    return ranks.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(_FANOUT_SALTS - 1)))
     )
 
 
@@ -279,16 +290,13 @@ def pagerank_with_n(
     results can differ from the unsalted run in the last ulp (partial
     sums regroup); the registry entries run unchunked.
     """
-    spark = edges.sparkSession
     parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
-    with _loop_shuffle_scope(spark, parts):
+    with _loop_shuffle_scope(edges.sparkSession, parts):
         adjacency, n = layout_adjacency(
             edges, parts, vertices=vertices, max_fanout=max_fanout
         )
-        if n == 0:
-            return spark.createDataFrame([], "id string, rank double"), 0
         ranks = _pagerank_rounds(
-            adjacency, n, n_iter, damping, parity, checkpoint_interval, init_ranks
+            adjacency, n, n_iter, damping, checkpoint_interval, parity, init_ranks
         )
     return ranks, n
 
@@ -298,37 +306,52 @@ def _pagerank_rounds(
     n: int,
     n_iter: int,
     damping: float,
-    parity: bool,
     checkpoint_interval: int,
-    init_ranks: DataFrame | None,
+    parity: bool = True,
+    init_ranks: DataFrame | None = None,
+    *,
+    seed: Column | None = None,
+    teleport: Column | None = None,
 ) -> DataFrame:
     """The round kernel over a :func:`layout_adjacency` layout; returns
-    the lazily checkpointed ``(id, rank)`` frame."""
-    teleport = (1.0 - damping) / n
+    the lazily checkpointed ``(id, rank)`` frame.
+
+    Each round computes ``rank' = teleport + d·Σ rank·share`` from the
+    ``seed`` ranks on. ``seed`` and ``teleport`` are Columns over
+    ``id``; they default to the uniform ``1/N`` and ``(1-d)/N``. The
+    share is ``1/outdeg``, or ``wfrac`` on a weighted layout. Rows
+    holding rank 0 send no messages, so a personalized run only
+    shuffles its frontier; adding 0.0 to a sum is exact, so the
+    filter cannot move a rank."""
+    if n == 0:  # no vertex, no rank
+        return adjacency.select("id", F.lit(0.0).alias("rank"))
+    if seed is None:
+        seed = F.lit(1.0 / n)
+    if teleport is None:
+        teleport = F.lit((1.0 - damping) / n)
     layout_cols = adjacency.columns
     salted = "__salt" in layout_cols
     keys = ["id", "__salt"] if salted else ["id"]
 
     def onto_layout(frame: DataFrame) -> DataFrame:
         """adjacency ⟕ frame on id: co-partitioned, sorted, no exchange
-        of the adjacency (chunked layouts key on the salt as well)."""
+        of the adjacency (chunked layouts key on the salt as well, so
+        the frame is replicated once per salt)."""
         if salted:
-            frame = _with_salt_replicas(frame)
+            salts = F.sequence(F.lit(0), F.lit(_FANOUT_SALTS - 1))
+            frame = frame.withColumn("__salt", F.explode(salts))
         return adjacency.join(frame, keys, "left")
 
     if init_ranks is None:
-        state = adjacency.withColumn("rank", F.lit(1.0 / n))
+        state = adjacency.withColumn("rank", seed)
     else:
-        missing = F.lit(teleport if parity else 0.0)
+        missing = teleport if parity else F.lit(0.0)
         state = onto_layout(init_ranks.select("id", "rank")).select(
             *layout_cols, F.coalesce("rank", missing).alias("rank")
         )
 
-    rank = F.lit(teleport) + F.lit(damping) * F.coalesce("insum", F.lit(0.0))
-    if parity:
-        target = F.explode("outlinks")
-        contrib = F.col("rank") / F.col("outdeg")
-    else:
+    rank = teleport + F.lit(damping) * F.coalesce("insum", F.lit(0.0))
+    if not parity:
         # dangling rank goes to the NULL key: outlinks never hold NULL
         # (collect_set drops it) and a NULL key joins no vertex
         dangling = F.col("outdeg") == 0
@@ -339,16 +362,30 @@ def _pagerank_rounds(
         contrib = F.when(dangling, F.col("rank")).otherwise(
             F.col("rank") / F.col("outdeg")
         )
+        messages = [target.alias("id"), contrib.alias("contrib")]
         dangling_mass = F.sum(F.when(F.col("id").isNull(), F.col("insum")))
         extra = (
             F.lit(damping) * F.coalesce(dangling_mass, F.lit(0.0)) / n
         ).alias("extra")
         rank = rank + F.col("extra")
-    contribs = [target.alias("id"), contrib.alias("contrib")]
+    elif "wlinks" in layout_cols:
+        share = F.transform(
+            "wlinks",
+            lambda e: F.struct(
+                e["id"].alias("id"), (F.col("rank") * e["wfrac"]).alias("contrib")
+            ),
+        )
+        messages = [F.inline(share)]
+    else:
+        messages = [
+            F.explode("outlinks").alias("id"),
+            (F.col("rank") / F.col("outdeg")).alias("contrib"),
+        ]
     insum = F.sum("contrib").alias("insum")
     next_state = [*layout_cols, rank.alias("rank")]
     for i in range(n_iter):
-        summed = state.select(contribs).groupBy("id").agg(insum)
+        sending = state.where(F.col("rank") != 0)
+        summed = sending.select(messages).groupBy("id").agg(insum)
         # corrected rounds read `summed` twice (sums + dangling mass):
         # without a barrier every round the plan doubles per round
         if not parity or ((i + 1) % checkpoint_interval == 0 and i + 1 < n_iter):
@@ -402,38 +439,28 @@ def personalized_pagerank(
 
     Update rule (dangling mass lost, matching parity-mode semantics):
     ``r_{i+1}(v) = (1-d)·[v = source] + d·Σ_{u→v} r_i(u)/deg(u)``,
-    seeded ``r_0 = [v = source]``. Ranks are SPARSE throughout: a
-    vertex untouched by propagation holds exactly 0 and never enters
-    the iteration shuffle — on a 100 TB graph the frontier grows from
-    1 vertex outward, so early iterations ship only the seed's
-    neighborhood instead of the whole vertex set (the uniform variant
-    cannot do this; its baseline is nonzero everywhere).
+    seeded ``r_0 = [v = source]``. This is the uniform kernel
+    (:func:`_pagerank_rounds`) with a one-hot seed and teleport
+    vector. A vertex the propagation has not reached holds exactly 0
+    and sends no messages, so on a 100 TB graph the round shuffles
+    carry only the frontier, which grows from the seed outward. Only
+    vertices with ``rank > 0`` are returned; a ``source`` that is not
+    a vertex yields no rows.
     """
-    spark = edges.sparkSession
     parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
-    with _loop_shuffle_scope(spark, parts):
+    with _loop_shuffle_scope(edges.sparkSession, parts):
         adjacency, n = layout_adjacency(edges, parts)
-        if n == 0:
-            return spark.createDataFrame([], "id string, rank double")
-        seed = spark.range(1).select(F.lit(source).cast("string").alias("id"))
-        ranks = seed.select("id", F.lit(1.0).alias("rank"))
-        base = seed.select("id", F.lit(1.0 - damping).alias("rank"))
-        for i in range(n_iter):
-            contribs = adjacency.join(ranks, "id").select(
-                F.explode("outlinks").alias("id"),
-                (F.col("rank") / F.col("outdeg") * damping).alias("rank"),
-            )
-            # teleport lands only on the source; propagated mass unions
-            # in and the per-vertex sum collapses both — still sparse
-            ranks = (
-                base.unionByName(contribs)
-                .groupBy("id")
-                .agg(F.sum("rank").alias("rank"))
-            )
-            runtime_counters.note_round()
-            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-                ranks = ranks.localCheckpoint(eager=False)
-        return ranks.localCheckpoint(eager=False)
+        is_source = F.col("id") == F.lit(source)
+        ranks = _pagerank_rounds(
+            adjacency,
+            n,
+            n_iter,
+            damping,
+            checkpoint_interval,
+            seed=F.when(is_source, 1.0).otherwise(0.0),
+            teleport=F.when(is_source, 1.0 - damping).otherwise(0.0),
+        )
+    return ranks.where(F.col("rank") > 0)
 
 
 def weighted_pagerank(
@@ -450,93 +477,13 @@ def weighted_pagerank(
     corpus scale: link multiplicity, click counts, co-occurrence
     frequencies.
 
-    Same scale posture as the uniform loop: the weighted adjacency
-    (id → array<struct<dst, wfrac>>) is built once with weights
-    pre-normalized (the per-iteration join never re-aggregates W(u)),
-    partitioned on id and checkpointed in one job that also counts N;
-    dangling mass is lost (parity-mode semantics)."""
-    spark = edges.sparkSession
-    w_edges = edges.groupBy("src", "dst").agg(
-        F.sum("weight").alias("w")
-    )
-    # aliased self-derived join: tot shares w_edges' lineage, so bare
-    # column refs to `w` would resolve ambiguously
-    tot = w_edges.groupBy("src").agg(F.sum("w").alias("W"))
-    adjacency = (
-        w_edges.alias("we")
-        .join(tot.alias("tt"), F.col("we.src") == F.col("tt.src"))
-        .select(
-            F.col("we.src").alias("id"),
-            F.struct(
-                F.col("we.dst").alias("dst"),
-                (F.col("we.w") / F.col("tt.W")).alias("wfrac"),
-            ).alias("out"),
-        )
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("out")).alias("outs"))
-    )
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    adjacency = vertices.join(adjacency, "id", "left").select(
-        "id", F.coalesce("outs", F.array()).alias("outs")
-    )
+    Weights are summed per ``(src, dst)``, then :func:`layout_adjacency`
+    normalizes them per source in its one aggregation, so rounds never
+    re-aggregate ``W(u)``. The rounds are the uniform kernel
+    (:func:`_pagerank_rounds`) shipping ``rank·wfrac``; dangling mass
+    is lost (parity-mode semantics)."""
+    summed = edges.groupBy("src", "dst").agg(F.sum("weight").alias(_WEIGHT))
     parts = _edge_partitions(edges, doubled=False, task_bytes=_LOOP_TASK_BYTES)
-    with _loop_shuffle_scope(spark, parts):
-        adjacency, n = _checkpoint_counted(adjacency.sortWithinPartitions("id"))
-        if n == 0:
-            return spark.createDataFrame([], "id string, rank double")
-        return _weighted_rounds(adjacency, n, n_iter, damping, checkpoint_interval)
-
-
-def _weighted_rounds(
-    adjacency: DataFrame,
-    n: int,
-    n_iter: int,
-    damping: float,
-    checkpoint_interval: int,
-) -> DataFrame:
-    # Sparse-rank loop: a vertex with no incoming weighted mass holds
-    # exactly the teleport baseline, so `ranks_sparse` carries only
-    # message receivers and each iteration is ONE join (state onto
-    # adjacency) instead of a join plus a dense left-join-back.
-    teleport = (1.0 - damping) / n
-    ranks_sparse: DataFrame | None = None
-    for i in range(n_iter):
-        if ranks_sparse is None:
-            src_ranks = adjacency.select(
-                "id", "outs", F.lit(1.0 / n).alias("rank")
-            )
-        else:
-            src_ranks = adjacency.join(ranks_sparse, "id", "left").select(
-                "id",
-                "outs",
-                F.coalesce("rank", F.lit(teleport)).alias("rank"),
-            )
-        contribs = src_ranks.select(
-            F.explode("outs").alias("o"), "rank"
-        ).select(
-            F.col("o.dst").alias("id"),
-            (F.col("rank") * F.col("o.wfrac")).alias("contrib"),
-        )
-        ranks_sparse = (
-            contribs.groupBy("id")
-            .agg(F.sum("contrib").alias("insum"))
-            .select(
-                "id",
-                (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias(
-                    "rank"
-                ),
-            )
-        )
-        runtime_counters.note_round()
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-            ranks_sparse = ranks_sparse.localCheckpoint(eager=False)
-    if ranks_sparse is None:
-        return adjacency.select("id", F.lit(1.0 / n).alias("rank"))
-    ranks = adjacency.select("id").join(ranks_sparse, "id", "left").select(
-        "id", F.coalesce("rank", F.lit(teleport)).alias("rank")
-    )
-    return ranks.localCheckpoint(eager=False)
+    with _loop_shuffle_scope(edges.sparkSession, parts):
+        adjacency, n = layout_adjacency(summed, parts)
+        return _pagerank_rounds(adjacency, n, n_iter, damping, checkpoint_interval)

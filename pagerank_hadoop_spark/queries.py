@@ -7282,10 +7282,10 @@ def q_ppr_from_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph [EXT]: personalized PageRank from a seed vertex (GraphX's
     personalizedPageRank surface) on the part→supplier citation graph
     — relevance-to-seed ranking, teleport mass returning to the seed.
-    Ranks stay sparse: the frontier grows outward from one vertex, so
-    early iterations ship only the seed's neighborhood (impossible in
-    the uniform variant, whose baseline is nonzero everywhere). Oracle
-    replays the recurrence as chained CTEs."""
+    It runs the uniform kernel with a one-hot seed and teleport
+    vector; vertices the frontier has not reached hold rank 0 and
+    send no messages, so early rounds shuffle only the seed's
+    neighborhood. Oracle replays the recurrence as chained CTEs."""
     from pagerank_hadoop_spark.operators.pagerank import personalized_pagerank
 
     edges = _pagerank_edges(spark, sf_dir)
@@ -7793,9 +7793,9 @@ def q_weighted_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge weight — a part that ships ten times through one supplier
     sends that supplier ten shares of rank, where the uniform variant
     counts the relationship once. Weights normalize once into the
-    cached adjacency (struct<dst, wfrac> arrays), so iterations never
-    re-aggregate totals; oracle replays the weighted recurrence as
-    chained CTEs."""
+    checkpointed adjacency layout (struct<id, wfrac> arrays), so
+    rounds never re-aggregate totals; oracle replays the weighted
+    recurrence as chained CTEs."""
     from pagerank_hadoop_spark.operators.pagerank import weighted_pagerank
 
     li = _t(spark, sf_dir, "lineitem")

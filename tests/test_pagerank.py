@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import pytest
 
-from pagerank_hadoop_spark.operators import adjacency_from_edges, pagerank, top_ranks
+from pagerank_hadoop_spark.operators import pagerank, top_ranks
+from pagerank_hadoop_spark.operators.pagerank import layout_adjacency
 
 
 def _ranks(df):
@@ -95,7 +96,8 @@ def test_adjacency_is_sorted_and_deduped(spark):
     df = spark.createDataFrame(
         [("a", "c"), ("a", "b"), ("a", "c")], "src string, dst string"
     )
-    rows = adjacency_from_edges(df).collect()
+    adj, _ = layout_adjacency(df, 1)
+    rows = adj.where("id = 'a'").collect()
     assert rows[0]["outlinks"] == ["b", "c"]
 
 
@@ -119,6 +121,15 @@ def test_personalized_pagerank_two_cycle_golden(spark):
         ra, rb = (1 - d) + d * rb, d * ra
     assert abs(got["a"] - ra) < 1e-12
     assert abs(got["b"] - rb) < 1e-12
+
+
+def test_personalized_pagerank_absent_seed_is_empty(spark):
+    """A seed that is not a vertex holds no rank, as in the oracle,
+    which restricts every round to the vertex set."""
+    from pagerank_hadoop_spark.operators.pagerank import personalized_pagerank
+
+    edges = spark.createDataFrame(CYCLE2, "src string, dst string")
+    assert personalized_pagerank(edges, "zzz", n_iter=8).collect() == []
 
 
 def test_personalized_pagerank_mass_stays_near_seed(spark):
@@ -291,20 +302,46 @@ def _small_graph(spark):
     return spark.createDataFrame(CYCLE2 + STAR3 + K3, "src string, dst string")
 
 
+def _weighted(edges):
+    """Deterministic weights 1..3 per edge, so weighted ranks differ
+    from the uniform ones."""
+    from pyspark.sql import functions as F
+
+    return edges.withColumn("weight", F.crc32(F.concat_ws(">", "src", "dst")) % 3 + 1)
+
+
+def _variants(edges, source, n_iter=8):
+    """The PageRank family on one edge list as lazy ``(id, rank)``
+    frames keyed by variant (uniform in both modes, personalized from
+    ``source``, weighted), and N."""
+    from pagerank_hadoop_spark.operators.pagerank import (
+        pagerank_with_n,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    out = {}
+    for parity in (True, False):
+        out[parity], n = pagerank_with_n(edges, n_iter=n_iter, parity=parity)
+    out["ppr"] = personalized_pagerank(edges, source, n_iter=n_iter)
+    out["weighted"] = weighted_pagerank(_weighted(edges), n_iter=n_iter)
+    return out, n
+
+
 def test_pagerank_leaves_no_cached_state(spark):
     """Nothing a PageRank run builds stays in the CacheManager, also at
     production width (``parts >= shuffle.partitions``), where the loop
-    scope is a no-op."""
-    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
-
+    scope is a no-op — for every variant of the family."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.catalog.clearCache()
     spark.conf.set(key, "1")
     try:
-        for parity in (True, False):
-            ranks, n = pagerank_with_n(_small_graph(spark), parity=parity)
-            assert len(ranks.collect()) == n == 9
+        variants, n = _variants(_small_graph(spark), "a")
+        assert n == 9
+        for variant, ranks in variants.items():
+            # PPR from a reaches only a's 2-cycle
+            assert len(ranks.collect()) == (2 if variant == "ppr" else n), variant
     finally:
         spark.conf.set(key, prev)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -313,10 +350,15 @@ def test_pagerank_leaves_no_cached_state(spark):
 def test_pagerank_build_and_rounds_run_few_jobs(spark):
     """Building the ranks runs one job (the adjacency layout, which also
     yields N); no round starts a job of its own, so build plus collect
-    stays within a handful of jobs in both modes."""
+    stays within a handful of jobs — uniform in both modes,
+    personalized and weighted."""
     from pyspark.sql import functions as F
 
-    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+    from pagerank_hadoop_spark.operators.pagerank import (
+        pagerank_with_n,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
 
     # a range-derived graph carries plan statistics, like a file scan
     ids = spark.range(300)
@@ -326,39 +368,43 @@ def test_pagerank_build_and_rounds_run_few_jobs(spark):
     )
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for parity in (True, False):
-        group = f"pagerank-jobs-{parity}"
+
+    def jobs(variant, build):
+        """Collect the ranks ``build()`` returns with N (or None),
+        bounding the jobs of the build and of build plus collect."""
+        group = f"pagerank-jobs-{variant}"
         sc.setJobGroup(group, group)
         try:
-            ranks, n = pagerank_with_n(edges, n_iter=8, parity=parity)
-            build = len(tracker.getJobIdsForGroup(group))
+            ranks, n = build()
+            built = len(tracker.getJobIdsForGroup(group))
             rows = ranks.collect()
             total = len(tracker.getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        assert built <= 2, (variant, built)
+        assert total <= 6, (variant, total)
+        return rows, n
+
+    for parity in (True, False):
+        rows, n = jobs(parity, lambda: pagerank_with_n(edges, n_iter=8, parity=parity))
         assert len(rows) == n
-        assert build <= 2, (parity, build)
-        assert total <= 6, (parity, total)
+    rows, _ = jobs("ppr", lambda: (personalized_pagerank(edges, "1", n_iter=8), None))
+    assert 0 < len(rows) < n
+    weighted = _weighted(edges)
+    rows, _ = jobs("weighted", lambda: (weighted_pagerank(weighted, n_iter=8), None))
+    assert len(rows) == n
 
 
 def _family_ranks(spark, edges, source):
-    from pagerank_hadoop_spark.operators.pagerank import (
-        pagerank_with_n,
-        personalized_pagerank,
-    )
-
-    out = {}
-    for parity in (True, False):
-        ranks, _ = pagerank_with_n(edges, n_iter=8, parity=parity)
-        out[parity] = {r.id: r.rank for r in ranks.collect()}
-    ppr = personalized_pagerank(edges, source, n_iter=8)
-    out["ppr"] = {r.id: r.rank for r in ppr.collect()}
-    return out
+    return {
+        variant: {r.id: r.rank for r in ranks.collect()}
+        for variant, ranks in _variants(edges, source)[0].items()
+    }
 
 
 def test_pagerank_family_invariant_to_width_and_aqe(spark, sf_dir):
-    """Ranks of uniform (both modes) and personalized PageRank agree to
-    1e-12 across shuffle partitions {1, 4, 32} x AQE on/off — on a
+    """Ranks of uniform (both modes), personalized and weighted
+    PageRank agree to 1e-12 across shuffle partitions {1, 4, 32} x AQE on/off — on a
     small golden graph and on the sf0.001 part→supplier graph."""
     from pagerank_hadoop_spark.queries import _pagerank_edges
 
@@ -411,6 +457,7 @@ def _check_oracle_module():
         "pagerank_resume",
         "wiki_pagerank",
         "ppr_from_part",
+        "weighted_pagerank_topk",
     ],
 )
 def test_pagerank_family_matches_oracle(spark, name):

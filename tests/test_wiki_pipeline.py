@@ -13,7 +13,8 @@ import os
 import pytest
 
 from pagerank_hadoop_spark.functions.wikitext import extract_links, remove_red_links
-from pagerank_hadoop_spark.operators import adjacency_from_edges, pagerank
+from pagerank_hadoop_spark.operators import pagerank
+from pagerank_hadoop_spark.operators.pagerank import layout_adjacency
 from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "pages.xml")
@@ -68,14 +69,15 @@ def test_red_link_semi_join(spark, parsed):
 
 def test_adjacency_and_count(spark, parsed):
     edges = remove_red_links(extract_links(parsed), parsed)
-    adj = adjacency_from_edges(edges)
+    adj, n = layout_adjacency(edges, 1, vertices=parsed.select("title"))
     rows = {r["id"]: r["outlinks"] for r in adj.collect()}
     assert rows["Alpha_Page"] == ["Beta", "Gamma_Page"]
     assert rows["Beta"] == ["Alpha_Page", "Gamma_Page"]
     assert rows["Delta"] == ["Alpha_Page", "Beta"]
-    # N counted over pages (PageRank.java:211-221): 4, though Gamma is
-    # dangling (no adjacency row from edges — restored by pagerank())
-    assert adj.count() == 3
+    # N counted over pages (PageRank.java:211-221): 4, with dangling
+    # Gamma holding the reference's empty-outlinks marker
+    assert rows["Gamma_Page"] == []
+    assert n == 4
 
 
 def test_end_to_end_pagerank_on_wiki_graph(spark, parsed):
